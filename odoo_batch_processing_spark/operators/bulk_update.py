@@ -42,6 +42,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
 
+from odoo_batch_processing_spark.session import materialize_once
 from odoo_batch_processing_spark.sources.loader import load_table
 
 ORD_COL = "row_ord"
@@ -513,7 +514,6 @@ def zip_join_update(
     values_col: str,
     visible: Column | None = None,
     apply_when: Column | None = None,
-    broadcast_values: bool = False,
     page_scale: bool = False,
     validate_unique: bool = False,
     bucket_cols: Sequence[str] | None = None,
@@ -533,11 +533,6 @@ def zip_join_update(
     but still CONSUMES its positional value (the loop index advances),
     which is exactly what guarding at assignment (not at the filter)
     produces.
-
-    ``broadcast_values``: hint only when the caller knows the value
-    relation is small (a dialog's pasted list); default lets AQE pick
-    the join strategy — an unconditional broadcast of a caller-supplied
-    relation is an OOM footgun at scale.
 
     Non-visible rows are retained in the output with their old values
     (the reference table keeps hidden rows — user.js:434 just skips
@@ -594,8 +589,7 @@ def zip_join_update(
     # the global-window form — by definition it fits one task, and the
     # distributed form's boundary-sketch job is pure overhead there;
     # stats come from the optimized plan, no job is run. Large values
-    # relations keep the sketch-bucketed scale path. broadcast_values
-    # is an explicit caller override with the same meaning.
+    # relations keep the sketch-bucketed scale path.
     try:
         vals_bytes = int(
             vals_src._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
@@ -611,15 +605,13 @@ def zip_join_update(
             exc_info=True,
         )
         vals_small = False
-    if broadcast_values or vals_small:
+    if vals_small:
         vals = with_ordinal(
             vals_src, values_order_cols, zip_ord, validate_unique=validate_unique
         )
     else:
         vals = ordinal(vals_src, values_order_cols, zip_ord)
     vals = vals.select(zip_ord, "__new_value")
-    if broadcast_values:
-        vals = F.broadcast(vals)
     new_val = F.coalesce(F.col("__new_value").cast(df.schema[column].dataType), F.col(column))
     if apply_when is not None:
         new_val = F.when(apply_when, new_val).otherwise(F.col(column))
@@ -637,7 +629,11 @@ def zip_join_update(
 # R10 — limit: first N rows in table order (user.js:451, 454)
 # ---------------------------------------------------------------------------
 def limit_ordered(
-    df: DataFrame, n: int, order_cols: Sequence[str], page_scale: bool = False
+    df: DataFrame,
+    n: int,
+    order_cols: Sequence[str],
+    page_scale: bool = False,
+    ord_col: str = ORD_COL,
 ) -> DataFrame:
     """Ordered top-N with the row's global ordinal attached. Bare
     .limit(n) is order-nondeterministic in a distributed plan; the
@@ -650,7 +646,8 @@ def limit_ordered(
     to the n surviving rows via :func:`distributed_ordinal`, so the
     whole plan is bounded by n, not by table size. ``page_scale=True``
     keeps the round-1 global-window form (rank everything, then
-    filter ≤ n) for parity comparison.
+    filter ≤ n) for parity comparison. ``ord_col`` names the ordinal
+    column, so a caller whose own order key is ``row_ord`` keeps it.
 
     tie-order: invariant AS USED in the registry (r10_limit outputs
     only order-key columns + ordinal, so tied rows — including ties
@@ -660,12 +657,12 @@ def limit_ordered(
     the ordinal assignment become layout-dependent.
     """
     if page_scale:
-        return with_ordinal(df, order_cols).filter(F.col(ORD_COL) <= n)
+        return with_ordinal(df, order_cols, ord_col).filter(F.col(ord_col) <= n)
     top = df.orderBy(*[F.col(c) for c in order_cols]).limit(n)
     # bounded_rows=n: the survivors of TakeOrderedAndProject are at
     # most n rows, so the ordinal skips its boundary-sketch job and
     # runs single-bucket — bounded by the caller's n, not table size
-    return distributed_ordinal(top, order_cols, bounded_rows=n)
+    return distributed_ordinal(top, order_cols, ord_col, bounded_rows=n)
 
 
 # ---------------------------------------------------------------------------
@@ -765,65 +762,57 @@ def bulk_update_run(
 ) -> BulkUpdateResult:
     """EP1 end-to-end: one value (R7) or a value list (R9) applied to
     the visible rows of ``df``, guard semantics as the reference, with
-    the run accounting computed in the same pass (single cache, two
-    actions: the counts and the caller's eventual write).
+    the run accounting computed from the update itself: the update is
+    pinned (``session.materialize_once``, freed by
+    ``release_materialized``) and ONE aggregate over the pin yields
+    every count, so the caller's eventual write reads the same blocks.
 
     Accounting matches user.js:443-513: guarded rows are *skipped*
     (neither success nor error — the loop `continue`s past them), and a
     run that applied nothing reports the 'nothing-updated' outcome
     (the reference's warning toast when no row accepted the value).
 
+    List mode gives ``value[i]`` to the i-th visible row in
+    ``order_cols`` order and stops at ``min(len(value), visible rows)``
+    (user.js:451) — the same result as :func:`zip_join_update`. Because
+    the list is a driver list, its length ``n`` is known: the values
+    become a local relation (pandas + Arrow, no Python-worker job), and
+    only the first ``n`` visible rows get ordinals, by the bounded
+    top-n of :func:`limit_ordered`, instead of a whole-table ordinal.
+    Those rows are joined back on the order key with null-safe
+    equality, so ``order_cols`` must be unique per row (the same total
+    order precondition as :func:`zip_join_update`).
+
     The visibility/guard flags are evaluated on the PRE-update rows
     and materialized as columns before the rewrite, so predicates that
     reference the updated column itself cannot corrupt the counts.
     """
     # NULL-valued predicates are treated as False everywhere (a row
-    # whose visibility is unknown is not visible) — without this, list
-    # mode would DROP such rows: they fail both filter(visible) and
-    # filter(~visible).
+    # whose visibility is unknown is not visible)
     visible = F.coalesce(visible, F.lit(False))
     applied = visible & F.coalesce(editable, F.lit(False)) & ~F.coalesce(readonly, F.lit(False))
     # flags pinned pre-update: post-update re-evaluation would be wrong
     # whenever `visible`/`readonly` mention `column`
     base = df.withColumn("__visible", visible).withColumn("__applied", applied)
 
-    counts = base.agg(
-        F.count(F.lit(1)).alias("all"),
-        F.sum(F.col("__visible").cast("int")).alias("vis"),
-    ).head()
-    all_rows, visible_rows = int(counts["all"]), int(counts["vis"] or 0)
-
     if isinstance(value, list):
         if spark is None:
             raise ValueError("value-list mode needs the SparkSession to build the value relation")
-        vals = spark.createDataFrame(
-            [(i + 1, v) for i, v in enumerate(value)], "ord bigint, v string"
-        )
-        # guard at ASSIGNMENT (apply_when): a readonly/non-editable row
-        # keeps its old value but still consumes its positional value,
-        # matching the reference's `continue` (user.js:477-480) where
-        # the loop index advances past skipped rows. zip_join_update
-        # retains the non-visible rows itself.
-        updated = zip_join_update(
-            base,
-            order_cols,
-            column,
-            vals,
-            ["ord"],
-            "v",
-            visible=F.col("__visible"),
-            apply_when=F.col("__applied"),
-            broadcast_values=True,  # dialog-pasted lists are small
-        )
+        updated = _zip_list_update(spark, base, order_cols, column, value) if value else base
     else:
         updated = broadcast_update(base, column, value, visible=F.col("__applied"))
 
-    # one materialization: the accounting aggregate and the caller's
-    # eventual write both read the persisted update, not two plan runs
-    updated = updated.persist()
-    oc = outcome_counts(updated.filter(F.col("__visible")), F.col("__applied")).head()
-    # sums are NULL over an empty visible set → 0
-    success, skipped = int(oc["success_count"] or 0), int(oc["error_count"] or 0)
+    updated = updated.transform(materialize_once)
+    acc = updated.agg(
+        F.count(F.lit(1)).alias("all"),
+        F.sum(F.col("__visible").cast("int")).alias("vis"),
+        F.sum(F.col("__applied").cast("int")).alias("applied"),
+    ).head()
+    # sums are NULL over an empty input → 0; __applied implies
+    # __visible, so every visible row not applied was skipped
+    all_rows, visible_rows = int(acc["all"]), int(acc["vis"] or 0)
+    success = int(acc["applied"] or 0)
+    skipped = visible_rows - success
     error = 0  # per-row rewrite cannot fail; sink failures raise instead
     # R16's CASE on driver-side scalars is plain Python — no job
     if success == 0 and error == 0:
@@ -842,6 +831,39 @@ def bulk_update_run(
         skipped,
         error,
         outcome,
+    )
+
+
+def _zip_list_update(
+    spark: SparkSession,
+    base: DataFrame,
+    order_cols: Sequence[str],
+    column: str,
+    values: list[str],
+) -> DataFrame:
+    """``bulk_update_run``'s list mode over a non-empty driver list:
+    ``values[i]`` to the i-th ``__visible`` row where ``__applied``. A
+    guarded row keeps its old value but still consumes its positional
+    value, matching the reference's `continue` (user.js:477-480) where
+    the loop index advances past skipped rows."""
+    import pandas as pd
+
+    zip_ord = "__zip_ord"  # private: must not collide with caller columns
+    vals = spark.createDataFrame(
+        pd.DataFrame({zip_ord: range(1, len(values) + 1), "__new_value": values}),
+        f"{zip_ord} bigint, __new_value string",
+    )
+    first_n = (
+        limit_ordered(base.filter(F.col("__visible")), len(values), order_cols, ord_col=zip_ord)
+        .join(vals, zip_ord)
+        .select(*[F.col(c).alias(f"__k{i}") for i, c in enumerate(order_cols)], "__new_value")
+    )
+    on = [F.col(c).eqNullSafe(F.col(f"__k{i}")) for i, c in enumerate(order_cols)]
+    new_val = F.coalesce(F.col("__new_value").cast(base.schema[column].dataType), F.col(column))
+    return (
+        base.join(first_n, on, "left")
+        .withColumn(column, F.when(F.col("__applied"), new_val).otherwise(F.col(column)))
+        .drop("__new_value", *[f"__k{i}" for i in range(len(order_cols))])
     )
 
 
@@ -1011,9 +1033,6 @@ def _q_r09_zip_join_update(spark: SparkSession, sf_dir: str) -> DataFrame:
         ["p_partkey"],
         "p_name",
         visible=F.col("l_linestatus") == "O",
-        # part scales with SF — no broadcast hint; the threshold + AQE
-        # decide (broadcast at fixture scale, shuffled join at 100 TB)
-        broadcast_values=False,
         validate_unique=True,
         bucket_cols=R09_BUCKET_COLS,
     )
@@ -1040,7 +1059,6 @@ def _q_r09_zip_join_hashkey(spark: SparkSession, sf_dir: str) -> DataFrame:
         ["p_partkey"],
         "p_name",
         visible=F.col("l_linestatus") == "O",
-        broadcast_values=False,
         validate_unique=True,
         bucket_cols=R09_BUCKET_COLS,
     )
@@ -1068,7 +1086,6 @@ def _q_r09_zip_join_page(spark: SparkSession, sf_dir: str) -> DataFrame:
         ["p_partkey"],
         "p_name",
         visible=F.col("l_linestatus") == "O",
-        broadcast_values=False,
         page_scale=True,
         validate_unique=True,
     )

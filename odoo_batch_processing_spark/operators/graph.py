@@ -95,6 +95,9 @@ def pagerank(
     m, n = int(scalars["m"]), int(scalars["n"])
     if edge_budget is not None:
         if m * iters > edge_budget:
+            # the caller gets no relation to release: unpin both here
+            edges.unpersist()
+            deg.unpersist()
             raise ValueError(
                 f"pagerank: |E|·iters = {m}·{iters} = {m * iters:,} exceeds "
                 f"edge_budget {edge_budget:,} — raise the budget, cut "

@@ -15,6 +15,13 @@ matter are `partitionBy` (layout for later partition pruning),
 `maxRecordsPerFile` (bounded file sizes), and in real deployments a
 table format (Delta/Iceberg) for MERGE/ACID — not in this container,
 stubbed behind `require_table_format()`.
+
+MERGE emulation (:func:`merge_into_partitioned`) rewrites a target it
+also reads. That is safe without a lineage cut because of the staging
+commit contract of ``partitionOverwriteMode=dynamic``: tasks write into
+``<target>/.spark-staging-<job>/`` and the committer swaps each touched
+partition directory only at job commit, after every task that read the
+old files has finished.
 """
 
 from __future__ import annotations
@@ -23,9 +30,8 @@ import logging
 import os
 import tempfile
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession, functions as F
-
-from odoo_batch_processing_spark.session import truncate_lineage
 
 _SCRATCH = os.path.join(os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))), ".scratch")
 
@@ -308,34 +314,49 @@ def merge_into_partitioned(
     (user.js:554-621 commits cell-by-cell into the live table); parquet
     is immutable, so the Spark-native restatement is:
 
-    1. restrict the target to partitions present in ``updates``
-       (left-semi on the partition column — partition pruning makes
-       this a touched-partitions-only scan at 100 TB);
+    1. collect the partition values present in ``updates`` and restrict
+       the target read to them with a literal filter — partition
+       pruning makes this a touched-partitions-only scan at 100 TB. The
+       match is null-safe: a NULL partition value (the
+       ``__HIVE_DEFAULT_PARTITION__`` directory) selects the target's
+       NULL partition, which the overwrite below replaces as a whole;
     2. drop the keys being upserted (left-anti on ``key``);
     3. union the updates and overwrite in ``partitionOverwriteMode=
        dynamic`` — untouched partitions are never read or written.
 
-    Cost is O(touched partitions), not O(table). The lineage cut
-    (``session.truncate_lineage`` — localCheckpoint, or reliable
-    checkpoint under ``SPARK_GRAFT_RELIABLE_CHECKPOINT=1``)
-    detaches the plan from ``target_dir`` so Spark permits writing a
-    path that fed the plan (self-overwrite guard); the materialized set
-    is bounded by the touched partitions. On a real deployment the same
-    call maps 1:1 onto Delta/Iceberg ``MERGE INTO`` (ACID, no
-    checkpoint materialization) — see require_table_format().
+    Cost is O(touched partitions), not O(table). ``updates`` is read
+    three times (partition values, anti-join keys, union), so it is
+    persisted for the call unless the caller already persisted it, and
+    only a pin taken here is released on exit. The merged set is not
+    materialized: the write reads the target it overwrites, which the
+    dynamic overwrite's staging commit makes safe (module docstring).
+    On a real deployment the same call maps 1:1 onto Delta/Iceberg
+    ``MERGE INTO`` (ACID) — see require_table_format().
     """
-    target = spark.read.parquet(target_dir)
-    touched = target.join(
-        updates.select(partition_by).distinct(), on=partition_by, how="left_semi"
-    )
-    remain = touched.join(updates.select(key), on=key, how="left_anti")
-    merged = remain.unionByName(updates.select(*remain.columns)).transform(truncate_lineage)
-    (
-        merged.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(partition_by)
-        .parquet(target_dir)
-    )
+    owned = updates.storageLevel == StorageLevel.NONE
+    if owned:
+        updates = updates.persist()
+    try:
+        parts = [r[0] for r in updates.select(partition_by).distinct().collect()]
+        if not parts:
+            return spark.read.parquet(target_dir)
+        col = F.col(partition_by)
+        values = [v for v in parts if v is not None]
+        touched = col.isin(values) if values else F.lit(False)
+        if len(values) < len(parts):
+            touched = touched | col.isNull()
+        target = spark.read.parquet(target_dir).filter(touched)
+        remain = target.join(updates.select(key), on=key, how="left_anti")
+        (
+            remain.unionByName(updates.select(*remain.columns))
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy(partition_by)
+            .parquet(target_dir)
+        )
+    finally:
+        if owned:
+            updates.unpersist()
     return spark.read.parquet(target_dir)
 
 
@@ -445,9 +466,9 @@ def _q_r21_merge_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """R21 at production fidelity: the identical upsert as r21_merge
     but through Delta Lake's ACID ``MERGE INTO`` (user.js:554-621's
     in-place commit semantics, transactional this time) — no
-    anti-join+union rewrite, no dynamic-partition-overwrite staging,
-    no checkpoint materialization; conflict detection and atomicity
-    come from the Delta commit protocol. Registered behind
+    anti-join+union rewrite, no dynamic-partition-overwrite staging;
+    conflict detection and atomicity come from the Delta commit
+    protocol. Registered behind
     :func:`_has_delta`, so the day the classpath carries delta-spark
     this runs under the same DuckDB oracle as the emulation and the
     two MERGE paths are certified equivalent."""

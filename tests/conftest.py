@@ -26,3 +26,9 @@ def duck():
     from odoo_batch_processing_spark.oracle import duckdb_connection
 
     return duckdb_connection(SF_SMOKE)
+
+
+def persistent_rdd_ids(spark) -> set[int]:
+    """Ids of the RDDs the session holds persisted (cached relations and
+    localCheckpoints alike) — the leak probe for pin/release tests."""
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())

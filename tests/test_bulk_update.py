@@ -559,3 +559,26 @@ def test_portable_row_hash_null_sentinel_cross_engine(spark):
     )
     assert sp == dk
     assert len(set(sp)) == 5  # all five NULL/shape variants distinct
+
+
+def test_bulk_update_run_pin_is_released(spark, listview):
+    """The update pinned for the accounting aggregate is registered with
+    ``session.materialize_once``, so ``release_materialized`` frees it and
+    the session's persisted RDDs return to where they started."""
+    from odoo_batch_processing_spark.operators.bulk_update import bulk_update_run
+    from odoo_batch_processing_spark.session import release_materialized
+    from tests.conftest import persistent_rdd_ids
+
+    listview.count()  # the module fixture's own cache is not this run's pin
+    release_materialized()
+    before = persistent_rdd_ids(spark)
+    for value in ("X", ["v1", "v2", "v3"]):
+        bulk_update_run(
+            listview, "name", value,
+            order_cols=["row_ord"],
+            visible=F.col("visible"), editable=F.col("editable"), readonly=F.col("readonly"),
+            spark=spark,
+        )
+        assert persistent_rdd_ids(spark) - before, "the run pinned nothing"
+        assert release_materialized() == 1
+        assert persistent_rdd_ids(spark) - before == set()

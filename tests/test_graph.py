@@ -76,13 +76,18 @@ def test_edge_budget_raises(spark):
     import pytest
 
     from odoo_batch_processing_spark.operators.graph import pagerank
+    from tests.conftest import persistent_rdd_ids
 
     edges = spark.createDataFrame(
         [(a, b) for a in range(4) for b in range(4) if a != b],
         "src bigint, dst bigint",
     )
+    before = persistent_rdd_ids(spark)
     with pytest.raises(ValueError, match="edge_budget"):
         pagerank(edges, iters=3, edge_budget=10)
+    # the error path hands the caller no relation to release, so the
+    # edge and degree pins taken before the budget check go with it
+    assert persistent_rdd_ids(spark) - before == set()
     # same graph under a sufficient budget completes
     assert pagerank(edges, iters=3, edge_budget=1000).count() == 4
 

@@ -4,9 +4,10 @@ truncation hold for arbitrary inputs, not just the golden cases."""
 
 from __future__ import annotations
 
+import random
 import re
 
-from hypothesis import given, settings, strategies as st
+from hypothesis import example, given, settings, strategies as st
 from pyspark.sql import functions as F
 
 SETTINGS = settings(max_examples=8, deadline=None)
@@ -105,6 +106,60 @@ def test_r21_merge_property(spark, tmp_path_factory, base_keys, upd_keys):
     merged = merge_into_partitioned(spark, target_dir, updates, key="k", partition_by="part")
     got = {r["k"]: r["v"] for r in merged.collect()}
     assert got == {**base, **upd}
+
+
+# --- EP1 list mode: bulk_update_run == zip_join_update reference ---------
+_flags = st.tuples(st.sampled_from([True, False, None]), st.booleans(), st.booleans())
+
+
+@given(
+    st.lists(_flags, max_size=30),
+    st.lists(st.sampled_from(["", "  ", "a", "b c", "Z"]), max_size=40),
+    st.booleans(),
+    st.randoms(use_true_random=False),
+)
+@example(flags=[(True, True, False)] * 3, values=[], null_key=False, rnd=random.Random(0))
+@SETTINGS
+def test_bulk_update_list_mode_matches_zip_join(spark, flags, values, null_key, rnd):
+    """List-mode bulk_update_run (bounded top-n zip) gives the values,
+    counts and outcome of the whole-table zip_join_update, over hidden
+    (incl. NULL-visible), readonly and non-editable rows, lists shorter
+    and longer than the visible rows, blank values and the empty list."""
+    from odoo_batch_processing_spark.operators.bulk_update import (
+        bulk_update_run,
+        zip_join_update,
+    )
+
+    keys = list(range(len(flags)))
+    rnd.shuffle(keys)
+    if null_key and keys:
+        keys[0] = None  # a NULL order key sorts first on both paths
+    df = spark.createDataFrame(
+        [(k, i, vis, ed, ro, f"old{i}") for i, (k, (vis, ed, ro)) in enumerate(zip(keys, flags))],
+        "row_ord bigint, row_id int, visible boolean, editable boolean, "
+        "readonly boolean, name string",
+    )
+    vis = F.coalesce(F.col("visible"), F.lit(False))
+    applied = vis & F.col("editable") & ~F.col("readonly")
+    res = bulk_update_run(
+        df, "name", values, ["row_ord"], F.col("visible"), F.col("editable"),
+        F.col("readonly"), spark=spark,
+    )
+    vals = spark.createDataFrame(
+        [(i + 1, v) for i, v in enumerate(values)], "ord bigint, v string"
+    )
+    ref = zip_join_update(
+        df, ["row_ord"], "name", vals, ["ord"], "v", visible=vis, apply_when=applied
+    )
+    got = {r["row_id"]: r["name"] for r in res.updated.collect()}
+    assert len(got) == len(flags)
+    assert got == {r["row_id"]: r["name"] for r in ref.collect()}
+    n_vis = sum(1 for v, _, _ in flags if v)
+    n_applied = sum(1 for v, ed, ro in flags if v and ed and not ro)
+    assert (res.all_rows, res.visible_rows, res.success_count, res.skipped_count, res.error_count) == (
+        len(flags), n_vis, n_applied, n_vis - n_applied, 0,
+    )
+    assert res.outcome == ("success" if n_applied else "nothing-updated")
 
 
 # --- X4 multi-probe: Spark probe cells == pure-Python reference ------------

@@ -546,3 +546,80 @@ def test_retired_keyed_layouts_swept_by_bounded_ttl(tmp_path):
     assert os.path.exists(keep_current)
     assert os.path.exists(keep_young)
     assert not os.path.exists(drop_retired)
+
+
+def _stage_target(spark, target_dir, rows):
+    spark.createDataFrame(rows, "k bigint, part string, v double").write.partitionBy(
+        "part"
+    ).parquet(target_dir)
+
+
+def test_merge_null_partition_keeps_other_null_rows(spark, tmp_path):
+    """An upsert into the NULL (``__HIVE_DEFAULT_PARTITION__``) partition
+    rewrites that partition whole, so the rest of its rows must be read
+    into the merge: a semi-join on the partition value never matches
+    NULL and used to drop them."""
+    from odoo_batch_processing_spark.sources.sinks import merge_into_partitioned
+
+    target_dir = str(tmp_path / "target")
+    _stage_target(spark, target_dir, [(1, "a", 1.0), (2, None, 2.0), (3, None, 3.0), (4, "b", 4.0)])
+    updates = spark.createDataFrame([(2, None, -2.0)], "k bigint, part string, v double")
+    merged = merge_into_partitioned(spark, target_dir, updates, key="k", partition_by="part")
+    assert sorted((r["k"], r["v"]) for r in merged.collect()) == [
+        (1, 1.0),
+        (2, -2.0),
+        (3, 3.0),
+        (4, 4.0),
+    ]
+
+
+def test_merge_upsert_derived_from_target(spark, tmp_path):
+    """An un-cached ``updates`` planned over the target itself (the
+    r21_merge / s_merge_upsert shape) is read before the overwrite
+    swaps any partition: the result equals the dict upsert."""
+    from odoo_batch_processing_spark.sources.sinks import merge_into_partitioned
+
+    target_dir = str(tmp_path / "target")
+    base = {k: float(k) for k in range(1, 41)}
+    _stage_target(spark, target_dir, [(k, "p" if k % 2 else "q", v) for k, v in base.items()])
+    updates = (
+        spark.read.parquet(target_dir)
+        .filter(F.col("k") % 3 == 0)
+        .withColumn("v", -F.col("v"))
+        .unionByName(spark.createDataFrame([(99, 99.0, "r")], "k bigint, v double, part string"))
+    )
+    expected = {**base, **{k: -v for k, v in base.items() if k % 3 == 0}, 99: 99.0}
+    merged = merge_into_partitioned(spark, target_dir, updates, key="k", partition_by="part")
+    assert {r["k"]: r["v"] for r in merged.collect()} == expected
+
+
+def test_merge_leaves_no_persistent_rdd(spark, tmp_path):
+    """The merge's own pin on ``updates`` is released and the merged set
+    is never checkpointed, so no persisted RDD outlives the call."""
+    from odoo_batch_processing_spark.sources.sinks import merge_into_partitioned
+    from tests.conftest import persistent_rdd_ids
+
+    target_dir = str(tmp_path / "target")
+    _stage_target(spark, target_dir, [(k, "p" if k % 2 else "q", float(k)) for k in range(20)])
+    updates = spark.createDataFrame([(3, "p", -3.0), (4, "q", -4.0)], "k bigint, part string, v double")
+    before = persistent_rdd_ids(spark)
+    merge_into_partitioned(spark, target_dir, updates, key="k", partition_by="part").collect()
+    assert persistent_rdd_ids(spark) - before == set()
+
+
+def test_merge_keeps_caller_cache(spark, tmp_path):
+    """A caller-persisted ``updates`` stays persisted: the merge releases
+    only a pin it took itself."""
+    from pyspark import StorageLevel
+
+    from odoo_batch_processing_spark.sources.sinks import merge_into_partitioned
+
+    target_dir = str(tmp_path / "target")
+    _stage_target(spark, target_dir, [(k, "p" if k % 2 else "q", float(k)) for k in range(20)])
+    updates = spark.createDataFrame([(3, "p", -3.0)], "k bigint, part string, v double").cache()
+    try:
+        merged = merge_into_partitioned(spark, target_dir, updates, key="k", partition_by="part")
+        assert {r["k"]: r["v"] for r in merged.collect()}[3] == -3.0
+        assert updates.storageLevel != StorageLevel.NONE
+    finally:
+        updates.unpersist()
