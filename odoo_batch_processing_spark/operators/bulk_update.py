@@ -632,22 +632,20 @@ def limit_ordered(
     df: DataFrame,
     n: int,
     order_cols: Sequence[str],
-    page_scale: bool = False,
     ord_col: str = ORD_COL,
 ) -> DataFrame:
     """Ordered top-N with the row's global ordinal attached. Bare
     .limit(n) is order-nondeterministic in a distributed plan; the
     reference's N is positional (user.js:451), so rank first.
 
-    Scale shape (default): ``orderBy(...).limit(n)`` — Spark plans
+    Scale shape: ``orderBy(...).limit(n)`` — Spark plans
     TakeOrderedAndProject, i.e. each partition keeps its local top-n
     and only n·n_parts candidate rows ever move; NO full-table shuffle
     or single-partition sort of the input. The ordinal is then attached
     to the n surviving rows via :func:`distributed_ordinal`, so the
-    whole plan is bounded by n, not by table size. ``page_scale=True``
-    keeps the round-1 global-window form (rank everything, then
-    filter ≤ n) for parity comparison. ``ord_col`` names the ordinal
-    column, so a caller whose own order key is ``row_ord`` keeps it.
+    whole plan is bounded by n, not by table size. ``ord_col`` names
+    the ordinal column, so a caller whose own order key is ``row_ord``
+    keeps it.
 
     tie-order: invariant AS USED in the registry (r10_limit outputs
     only order-key columns + ordinal, so tied rows — including ties
@@ -656,8 +654,6 @@ def limit_ordered(
     unique ``order_cols`` (tiebreakers), or both the boundary cut and
     the ordinal assignment become layout-dependent.
     """
-    if page_scale:
-        return with_ordinal(df, order_cols, ord_col).filter(F.col(ord_col) <= n)
     top = df.orderBy(*[F.col(c) for c in order_cols]).limit(n)
     # bounded_rows=n: the survivors of TakeOrderedAndProject are at
     # most n rows, so the ordinal skips its boundary-sketch job and
@@ -1172,27 +1168,16 @@ def _q_r20_coalesce_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Core catalog (driver-checked): one entry per reference-op family —
-# r10 exercises R1's ordinal, r06 folds in R5's ANY probe, r13_r14
-# merges the two scalar rewrites, r16 includes R15's counts, r20 folds
-# in R3/R4's positional projection. The standalone micro-queries stay
-# registered in the extended catalog (oracle-checked locally via
-# tools/oracle_check --extended).
+# One entry per reference-op family: r10 exercises R1's ordinal, r06
+# folds in R5's ANY probe, r13_r14 merges the two scalar rewrites, r16
+# includes R15's counts, r20 folds in R3/R4's positional projection.
+# The standalone micro-queries stay registered and oracle-checked.
 QUERIES = {
     "r02_visibility_filter": _q_r02_visibility_filter,
-    "r06_counts": _q_r06_counts,
     "r07_broadcast_update": _q_r07_broadcast_update,
     "r09_zip_join_update": _q_r09_zip_join_update,
     "r10_limit": _q_r10_limit,
-    "r13_r14_coerce_clamp": _q_r13_r14_coerce_clamp,
     "r16_outcome_classify": _q_r16_outcome_classify,
-    "r20_coalesce_cascade": _q_r20_coalesce_cascade,
-}
-
-QUERIES_EXT = {
-    # demoted round 3 (VERDICT r2 #8): R8's parse semantics are already
-    # covered by x5's tokenization and r09's ordered zip; the slot went
-    # to x3_incremental_neardup
     "r08_multiline_parse": _q_r08_multiline_parse,
     "r09_zip_join_page": _q_r09_zip_join_page,
     "r01_scan_ordinal": _q_r01_scan_ordinal,
@@ -1201,6 +1186,10 @@ QUERIES_EXT = {
     "r13_bool_coercion": _q_r13_bool_coercion,
     "r14_numeric_clamp": _q_r14_numeric_clamp,
     "r15_outcome_counts": _q_r15_outcome_counts,
+    "r09_zip_join_hashkey": _q_r09_zip_join_hashkey,
+    "r06_counts": _q_r06_counts,
+    "r13_r14_coerce_clamp": _q_r13_r14_coerce_clamp,
+    "r20_coalesce_cascade": _q_r20_coalesce_cascade,
 }
 
 ORACLES = {
@@ -1280,9 +1269,6 @@ ORACLES = {
                         '<unresolved>') AS editor
         FROM customer
     """,
-}
-
-ORACLES_EXT = {
     "r08_multiline_parse": """
         SELECT doc_id,
                CAST(generate_subscripts(toks, 1) AS BIGINT) AS pos,
@@ -1325,16 +1311,15 @@ ORACLES_EXT = {
     """,
 }
 
-# identical output contract to the core r09 — only the physical
-# ordinal strategy differs (core = distributed_ordinal since round 4;
-# this ext entry keeps the page-scale global-window form oracle-checked)
-ORACLES_EXT["r09_zip_join_page"] = ORACLES["r09_zip_join_update"]
+# identical output contract to r09 — only the physical ordinal
+# strategy differs (r09 = distributed_ordinal since round 4; this entry
+# keeps the page-scale global-window form oracle-checked)
+ORACLES["r09_zip_join_page"] = ORACLES["r09_zip_join_update"]
 
-QUERIES_EXT["r09_zip_join_hashkey"] = _q_r09_zip_join_hashkey
 # the md5 tiebreaker in the ORDER BY is generated from the SAME
 # R09_ROW_COLS tuple as the Spark column (shared fragment pair in
 # profile.py), so query and oracle cannot drift
-ORACLES_EXT["r09_zip_join_hashkey"] = """
+ORACLES["r09_zip_join_hashkey"] = """
     WITH rows_ord AS (
         SELECT l_orderkey, l_linenumber, l_returnflag,
                ROW_NUMBER() OVER (ORDER BY
@@ -1352,16 +1337,3 @@ ORACLES_EXT["r09_zip_join_hashkey"] = """
     SELECT l_orderkey, l_linenumber, l_returnflag
     FROM lineitem WHERE NOT (l_linestatus = 'O')
 """.format(tb=_r09_tb_sql())
-
-
-# ROTATION_R17 (registry.py): three reference-semantics rows vacate
-# seats for the never-audited promotions — r06 (counting), r13/r14
-# (coercion/clamp) and r20 (coalesce cascade) have been driver-audited
-# every round since round 1 and stay under the local oracle + the R-row
-# parity tests; the family keeps five core rows (r02/r07/r09/r10/r16).
-QUERIES_EXT["r06_counts"] = QUERIES.pop("r06_counts")
-ORACLES_EXT["r06_counts"] = ORACLES.pop("r06_counts")
-QUERIES_EXT["r13_r14_coerce_clamp"] = QUERIES.pop("r13_r14_coerce_clamp")
-ORACLES_EXT["r13_r14_coerce_clamp"] = ORACLES.pop("r13_r14_coerce_clamp")
-QUERIES_EXT["r20_coalesce_cascade"] = QUERIES.pop("r20_coalesce_cascade")
-ORACLES_EXT["r20_coalesce_cascade"] = ORACLES.pop("r20_coalesce_cascade")

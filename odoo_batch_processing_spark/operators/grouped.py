@@ -115,11 +115,7 @@ def _q_grouped_agg_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(mad_cents(F.col("cents")).alias("mad_cents"))
     )
 
-QUERIES = {"grouped_pandas_ranks": _q_grouped_pandas_ranks}
-
-QUERIES_EXT = {"grouped_agg_mad": _q_grouped_agg_mad}
-
-ORACLES_EXT = {
+ORACLES = {
     # same statistic via two nested medians; ints and exact halves are
     # exactly representable, so interpolation matches numpy bit-for-bit
     "grouped_agg_mad": """
@@ -136,9 +132,6 @@ ORACLES_EXT = {
         FROM c JOIN m USING (o_orderpriority)
         GROUP BY c.o_orderpriority
     """,
-}
-
-ORACLES = {
     # the pandas per-group logic restated in SQL: rank by (price, key),
     # min-max normalize within customer (single-op float arithmetic)
     "grouped_pandas_ranks": """
@@ -208,8 +201,7 @@ def _q_grouped_cogroup_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES_EXT["grouped_cogroup_enrich"] = _q_grouped_cogroup_enrich
-ORACLES_EXT["grouped_cogroup_enrich"] = """
+ORACLES["grouped_cogroup_enrich"] = """
     SELECT c.c_custkey AS user_id,
            COALESCE(e.n, 0) AS n_events,
            COALESCE(e.cents, 0) AS value_cents,
@@ -222,3 +214,10 @@ ORACLES_EXT["grouped_cogroup_enrich"] = """
         FROM events GROUP BY user_id
     ) e ON e.user_id = c.c_custkey
 """
+
+
+QUERIES = {
+    "grouped_pandas_ranks": _q_grouped_pandas_ranks,
+    "grouped_agg_mad": _q_grouped_agg_mad,
+    "grouped_cogroup_enrich": _q_grouped_cogroup_enrich,
+}

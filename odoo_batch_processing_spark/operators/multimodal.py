@@ -169,15 +169,6 @@ def _q_mm_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sample_frames(vids).select("doc_id", "n_sampled")
 
 
-QUERIES = {
-    "mm_binary_meta": _q_mm_binary_meta,
-    "mm_decode_features": _q_mm_decode_features,
-}
-
-QUERIES_EXT = {
-    "mm_frame_sample": _q_mm_frame_sample,
-}
-
 ORACLES = {
     "mm_binary_meta": """
         SELECT doc_id,
@@ -212,9 +203,6 @@ ORACLES = {
                             i -> hx[i] = '0123456789ABCDEF'[d]))), ',') AS hist_csv
         FROM h
     """,
-}
-
-ORACLES_EXT = {
     "mm_frame_sample": """
         SELECT doc_id,
                CAST(len(list_filter(range(0, CAST(ceil(octet_length(CAST(text AS BLOB)) / 64.0) AS INTEGER)),
@@ -371,7 +359,6 @@ def _q_mm_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return mm_neardup_pairs(mm_stream_fingerprints(media))
 
 
-QUERIES_EXT["mm_neardup"] = _q_mm_neardup
 # the QUALIFY mirrors cap_hot_buckets exactly (drop every row of any
 # (modality, band, band_val) bucket holding more than the cap): the
 # drop is deterministic, so Spark and DuckDB agree even on a corpus
@@ -389,7 +376,7 @@ from odoo_batch_processing_spark.operators.dedup import (  # noqa: E402
     _SIMHASH_VOTES as _MM_VOTES,
 )
 
-ORACLES_EXT["mm_neardup"] = f"""
+ORACLES["mm_neardup"] = f"""
     WITH h AS (
         SELECT doc_id,
                ['image', 'audio', 'video'][CAST(doc_id % 3 AS INTEGER) + 1] AS modality,
@@ -425,3 +412,11 @@ ORACLES_EXT["mm_neardup"] = f"""
            CAST(bit_count(xor(sim_a, sim_b)) AS INTEGER) AS hamming
     FROM cand WHERE bit_count(xor(sim_a, sim_b)) <= {_MM_HAMMING_MAX}
 """
+
+
+QUERIES = {
+    "mm_binary_meta": _q_mm_binary_meta,
+    "mm_decode_features": _q_mm_decode_features,
+    "mm_frame_sample": _q_mm_frame_sample,
+    "mm_neardup": _q_mm_neardup,
+}

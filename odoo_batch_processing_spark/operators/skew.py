@@ -147,11 +147,12 @@ def _q_skew_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES = {"skew_salted_agg": _q_skew_salted_agg}
+QUERIES = {
+    "skew_salted_agg": _q_skew_salted_agg,
+    "skew_salted_join": _q_skew_salted_join,
+}
 
-QUERIES_EXT = {"skew_salted_join": _q_skew_salted_join}
-
-ORACLES_EXT = {
+ORACLES = {
     "skew_salted_join": """
         SELECT p_brand,
                CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
@@ -159,9 +160,6 @@ ORACLES_EXT = {
         FROM lineitem JOIN part ON l_partkey = p_partkey
         GROUP BY p_brand
     """,
-}
-
-ORACLES = {
     "skew_salted_agg": """
         SELECT l_returnflag,
                CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2)) * (1 - CAST(l_discount AS DECIMAL(12,2)))) AS DOUBLE) AS revenue,

@@ -150,8 +150,8 @@ def check_all(
 ) -> list[CompareResult]:
     """Run registered queries against their oracles at ``sf_dir``.
 
-    ``extended=False`` sweeps the core (driver-facing) catalog;
-    ``extended=True`` adds the extended tier. Explicit ``only`` names
+    ``extended=False`` sweeps the driver-facing ``registry.CORE``;
+    ``extended=True`` sweeps the whole catalog. Explicit ``only`` names
     resolve against the full (extended) catalog either way.
     """
     from odoo_batch_processing_spark.registry import all_oracles, all_queries

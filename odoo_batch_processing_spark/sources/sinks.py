@@ -504,7 +504,19 @@ def _q_r21_merge_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES = {"r21_merge": _q_r21_merge}
+QUERIES = {
+    "r21_merge": _q_r21_merge,
+    "src_jsonl_roundtrip": _q_src_jsonl_roundtrip,
+    # plain write/read-back roundtrip: covered in spirit by r21_merge's
+    # stage-then-read
+    "r21_sink_roundtrip": _q_r21_sink_roundtrip,
+    "src_csv_roundtrip": _q_src_csv_roundtrip,
+    "src_orc_roundtrip": _q_src_orc_roundtrip,
+    # ACID MERGE twin: registered only when the Delta classpath exists
+    # (absent in this build — see _has_delta; tests/test_sinks.py
+    # documents the skip)
+    **({"r21_merge_delta": _q_r21_merge_delta} if _has_delta() else {}),
+}
 
 ORACLES = {
     # upsert = CASE over the touched keys; untouched partitions intact
@@ -515,23 +527,7 @@ ORACLES = {
                o_orderstatus
         FROM orders
     """,
-}
-
-# plain write/read-back roundtrip: covered in spirit by r21_merge's
-# stage-then-read; kept oracle-checked in the extended tier.
-QUERIES_EXT = {
-    "r21_sink_roundtrip": _q_r21_sink_roundtrip,
-    "src_jsonl_roundtrip": _q_src_jsonl_roundtrip,
-    "src_csv_roundtrip": _q_src_csv_roundtrip,
-    "src_orc_roundtrip": _q_src_orc_roundtrip,
-    # ACID MERGE twin: registered only when the Delta classpath exists
-    # (absent in this build — see _has_delta; tests/test_sinks.py
-    # documents the skip)
-    **({"r21_merge_delta": _q_r21_merge_delta} if _has_delta() else {}),
-}
-
-# identical to r07: the sink must not change the relation
-ORACLES_EXT = {
+    # identical to r07: the sink must not change the relation
     "r21_sink_roundtrip": """
         SELECT o_orderkey,
                CASE WHEN o_orderstatus = 'O' AND NOT (o_orderpriority = '1-URGENT')
@@ -566,11 +562,4 @@ ORACLES_EXT = {
 
 # the ACID path must land on byte-identical content as the emulation
 if _has_delta():
-    ORACLES_EXT["r21_merge_delta"] = ORACLES["r21_merge"]
-
-
-# ROTATION_R17 (registry.py): the non-parquet source family's first
-# driver row — the JSONL interchange roundtrip (schema-on-read over
-# free text) audits the read path the raw-crawl landing format uses.
-QUERIES["src_jsonl_roundtrip"] = QUERIES_EXT.pop("src_jsonl_roundtrip")
-ORACLES["src_jsonl_roundtrip"] = ORACLES_EXT.pop("src_jsonl_roundtrip")
+    ORACLES["r21_merge_delta"] = ORACLES["r21_merge"]

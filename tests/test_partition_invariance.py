@@ -32,7 +32,7 @@ INVARIANCE_QUERIES = (
     "x9_pack_shards",  # prefix-sum shard packing
     "x7_sessionize",  # window lag/cumsum session ids
     "x8_approx_aggs",  # sketch aggregates under the hash gate
-    # round-14 core rotation (registry.ROTATION_R14): the 8 promoted
+    # round-14 core rotation: the 8 promoted
     # queries face the external harness — and its session/partition
     # layout — for the first time, so each gets a direct invariance
     # row rather than riding a mechanism cousin
@@ -44,7 +44,7 @@ INVARIANCE_QUERIES = (
     "x3_containment",  # capped shingle self-join containment pairs
     "w_interval_sweep",  # interval boundary-event cumsum
     "profile_checksum",  # order/partition-invariant table checksum
-    # round-15 core rotation (registry.ROTATION_R15): same de-risking
+    # round-15 core rotation: same de-risking
     # for the 8 batch promotions. s_r22_manifest_counts is the ninth
     # promoted query but is EXCLUDED here by design: its
     # _with_stream_shuffle wrapper pins the stream's shuffle count
@@ -58,7 +58,7 @@ INVARIANCE_QUERIES = (
     "x6_variant_shred",  # variant extraction + grouped aggregates
     "w_gap_fill_ffill",  # calendar scaffold + last-value forward fill
     "scd2_user_tiers",  # window-versioned type-2 history build
-    # round-16 core rotation (registry.ROTATION_R16): same de-risking
+    # round-16 core rotation: same de-risking
     # for the seven batch promotions (s_x3_stream_incremental_neardup
     # is the eighth but is stream-shuffle-pinned like
     # s_r22_manifest_counts — its receipt is the exact oracle at
@@ -72,7 +72,7 @@ INVARIANCE_QUERIES = (
     "x9_difficulty_deciles",  # surprisal-ranked curriculum bucketing
     # round-16 new op (ext tier): bigram LM, float mean per doc
     "x5_bigram_surprisal",
-    # round-17 core rotation (registry.ROTATION_R17): same de-risking
+    # round-17 core rotation: same de-risking
     # for all 8 batch promotions — each faces the external harness's
     # partition layout for the first time
     "x9_crypto_shred",  # key-join erasure + surviving-rows aggregate

@@ -40,10 +40,18 @@ def test_normalize_strips_volatile_ids_only():
     sessions (IDs shift with analyzer history) while still seeing a
     REAL literal change — the exact round-8 drift (df <= 250 vs 64)
     must not be normalized away."""
-    from tools.dump_plans import normalize
+    from tools.dump_plans import REPO_ROOT, normalize
 
     a = "Condition : ((df#2248L >= 2) AND (df#2248L <= 64)) [plan_id=17]"
     b = "Condition : ((df#9001L >= 2) AND (df#9001L <= 64)) [plan_id=3]"
     stale = "Condition : ((df#2248L >= 2) AND (df#2248L <= 250)) [plan_id=17]"
     assert normalize(a) == normalize(b)
     assert normalize(a) != normalize(stale)
+    # the checkout path is volatile too (another clone, another root);
+    # the repo-relative rest of the path is not
+    here = f"Location: InMemoryFileIndex [file:{REPO_ROOT}/.scratch/keyed-ivf-0123456789abcdef]"
+    elsewhere = here.replace(REPO_ROOT, "<repo>")
+    moved = here.replace("keyed-ivf", "keyed-lsh")
+    assert normalize(here) == normalize(elsewhere)
+    assert "<repo>/.scratch/keyed-ivf-KEY" in normalize(here)
+    assert normalize(here) != normalize(moved)

@@ -2,7 +2,15 @@
 
 from __future__ import annotations
 
-from odoo_batch_processing_spark.registry import CORE_CAP, all_oracles, all_queries
+import importlib
+
+from odoo_batch_processing_spark.registry import (
+    _MODULES,
+    CORE,
+    CORE_CAP,
+    all_oracles,
+    all_queries,
+)
 
 
 def test_core_tier_fits_driver_window():
@@ -23,8 +31,8 @@ def test_operator_families_all_in_core():
     """One driver-visible row per operator family — the round-1 gap
     (8 families landed past the 50-entry window) must not reopen."""
     core = set(all_queries())
-    # any-of per family, so a core-window rotation (registry.py
-    # ROTATION_R14) can swap representatives without reopening the gap
+    # any-of per family, so an edit to registry.CORE can swap
+    # representatives without reopening the gap
     families = {
         "analytics": {"q01_pricing_summary", "q03_top_orders",
                       "q09_profit_by_nation_year", "q05_revenue_by_nation"},
@@ -44,13 +52,13 @@ def test_operator_families_all_in_core():
         "multimodal": {"mm_decode_features"},
         "sinks": {"r21_merge"},
         "streaming": {"s_r17_progress"},
-        # pit_tier_at_purchase (scd.py) is the family's ROTATION_R16
-        # representative — the same as-of-join shape over SCD2 history
+        # pit_tier_at_purchase (scd.py) is the family's representative —
+        # the same as-of-join shape over SCD2 history
         "asof": {"asof_last_purchase", "pit_tier_at_purchase"},
         # first-ever driver rows for these two (round 14)
         "graph": {"g_pagerank_simgraph"},
-        # profile_robust_outliers / dq_expectations took the seat in
-        # ROTATION_R17 (checksum rotated to extended)
+        # profile_robust_outliers / dq_expectations hold the seat
+        # (checksum is outside the core)
         "profile": {"profile_checksum", "profile_robust_outliers",
                     "dq_expectations"},
         # first-ever driver rows for these two families (round 17)
@@ -68,3 +76,18 @@ def test_extended_tier_superset_of_core():
     core, ext = all_queries(), all_queries(extended=True)
     assert set(core) <= set(ext)
     assert len(ext) > len(core)
+
+
+def test_core_declared_once():
+    """Core membership lives in registry.CORE alone: the core catalog
+    is exactly CORE in CORE's order, and no module keeps a tier dict of
+    its own."""
+    assert len(set(CORE)) == len(CORE), "duplicate names in CORE"
+    assert len(CORE) <= CORE_CAP
+    assert list(all_queries()) == list(CORE)
+    ext = all_queries(extended=True)
+    assert [name for name in CORE if name not in ext] == []
+    for modname in _MODULES:
+        mod = importlib.import_module(modname)
+        for attr in ("QUERIES_EXT", "ORACLES_EXT"):
+            assert not hasattr(mod, attr), f"{modname} defines {attr}"

@@ -21,7 +21,8 @@ import os
 import re
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO_ROOT)
 
 HEADLINERS = [
     "q05_revenue_by_nation",
@@ -60,24 +61,23 @@ HEADLINERS = [
     # sessionizer (two window passes + summary stitch, no broadcast hint)
     "g_doulion_triangles",
     "x7_sessionize_chunked",
-    # round-14 core-window rotation (registry.ROTATION_R14): the five
-    # promoted queries not already pinned above — driver-facing now,
-    # so their plan shapes are review surface
+    # round-14 core-window rotation: the five promoted queries not
+    # already pinned above — driver-facing then, so their plan shapes
+    # are review surface
     "x3_containment",
     "x4_ivf_trained_topk",
     "x9_weighted_sample",
     "g_pagerank_simgraph",
     "profile_checksum",
-    # round-15 core-window rotation (registry.ROTATION_R15): the four
-    # batch promotions not already pinned above — the indexed-LSH plan
-    # is the round's scan-local bucket_n receipt (PushedFilters, no
-    # count/semi-join), the other three are first-time driver surface
+    # round-15 core-window rotation: the four batch promotions not
+    # already pinned above — the indexed-LSH plan is the round's
+    # scan-local bucket_n receipt (PushedFilters, no count/semi-join),
+    # the other three were first-time driver surface
     "x3_minhash_indexed",
     "x9_group_sample",
     "x6_variant_shred",
     "scd2_user_tiers",
-    # round-16 core-window rotation (registry.ROTATION_R16) promotions
-    # not already pinned above
+    # round-16 core-window rotation promotions not already pinned above
     "ivm_refresh",
     "x4_ivf_indexed_multiprobe",
     "x5_gopher_repetition",
@@ -85,8 +85,8 @@ HEADLINERS = [
     "x7_event_transitions",
     "pit_tier_at_purchase",
     "x9_difficulty_deciles",
-    # round-17 core-window rotation (registry.ROTATION_R17): all 8
-    # promotions are first-time driver surface
+    # round-17 core-window rotation: all 8 promotions were first-time
+    # driver surface
     "x9_crypto_shred",
     "x7_funnel_steps",
     "agg_grouping_sets",
@@ -101,13 +101,20 @@ HEADLINERS = [
 ]
 
 SF_DIR = "/root/testdata/sf0.1"
-PLANS_PATH = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "PLANS.md"
-)
+PLANS_PATH = os.path.join(REPO_ROOT, "PLANS.md")
+_REPO_ROOT_RE = re.compile(re.escape(REPO_ROOT) + r"(?![\w.-])")
+
+
+def strip_repo_root(text: str) -> str:
+    """Print the checkout path (scratch sinks and write-time indexes
+    live under ``<repo>/.scratch``) as ``<repo>``, so a dump made in
+    one checkout compares equal to the same plan dumped in another."""
+    return _REPO_ROOT_RE.sub("<repo>", text)
 
 
 def render() -> str:
-    """Render the PLANS.md content for the current HEAD (not normalized)."""
+    """Render the PLANS.md content for the current HEAD (not normalized;
+    only the checkout path is replaced, see :func:`strip_repo_root`)."""
     from odoo_batch_processing_spark.registry import all_queries
     from odoo_batch_processing_spark.session import get_spark
 
@@ -127,7 +134,7 @@ def render() -> str:
             df._jdf.queryExecution(), "formatted"
         )
         out.append(f"## {name}\n\n```\n{plan.strip()}\n```\n")
-    return "\n".join(out)
+    return strip_repo_root("\n".join(out))
 
 
 def normalize(text: str) -> str:
@@ -157,7 +164,9 @@ def normalize(text: str) -> str:
     text = re.sub(
         r"(\.scratch/(?!keyed-)[a-zA-Z0-9_.-]+-)[a-z0-9_]{8}\b", r"\1TMP", text
     )
-    return text
+    # the checkout path itself: another clone of the repo renders the
+    # same plans under a different root
+    return strip_repo_root(text)
 
 
 def _sections(text: str) -> dict[str, str]:

@@ -20,7 +20,7 @@ def main() -> int:
     parser.add_argument(
         "--extended",
         action="store_true",
-        help="also sweep the extended tier (QUERIES_EXT) beyond the driver-facing core catalog",
+        help="sweep the whole catalog, not only the driver-facing registry.CORE",
     )
     parser.add_argument("names", nargs="*")
     args = parser.parse_args()
