@@ -24,17 +24,15 @@ single-partition sort — the default ordinal everywhere is
 :func:`distributed_ordinal` (range-partition → local row_number →
 broadcast n_parts-row offsets), and ordered top-N plans
 TakeOrderedAndProject (per-partition top-n, only n·n_parts rows move).
-The global-window :func:`with_ordinal` survives as the explicit
-``page_scale=True`` parity form, mirroring the reference's
-one-visible-page scope (user.js:432-452). Where positional semantics
-aren't actually required, callers should still join/update on real
-keys instead.
+The global-window :func:`with_ordinal` serves inputs known to fit one
+task (R1's ordered scan, a small values side). Where positional
+semantics aren't actually required, callers should still join/update
+on real keys instead.
 """
 
 from __future__ import annotations
 
 import logging
-import os
 import re
 import threading
 from collections.abc import Sequence
@@ -196,10 +194,10 @@ def distributed_ordinal(
     Callers whose natural key is not unique MUST append tiebreaker
     columns — enough payload columns to make the full tuple unique —
     and mirror the same tiebreakers in any cross-engine oracle. Pass
-    ``validate_unique=True`` (or set ``SPARK_GRAFT_VALIDATE_ORDINAL=1``)
-    to fail loudly on duplicate keys — validation rides the ordinal's
-    own window (a ``lag`` adjacency check: duplicate keys are adjacent
-    in the bucket sort and always co-bucket) and is enforced per row
+    ``validate_unique=True`` to fail loudly on duplicate keys —
+    validation rides the ordinal's own window (a ``lag`` adjacency
+    check: duplicate keys are adjacent in the bucket sort and always
+    co-bucket) and is enforced per row
     on the ordinal expression itself, so it costs no extra scan, no
     extra shuffle, and no hash distinct, and raises
     ``SparkRuntimeException`` ("order key ... is not unique") from
@@ -231,7 +229,6 @@ def distributed_ordinal(
     spark = df.sparkSession
     if n_parts is None:
         n_parts = spark.sparkContext.defaultParallelism
-    validate = validate_unique or os.environ.get("SPARK_GRAFT_VALIDATE_ORDINAL") == "1"
     bucket_cols = list(bucket_cols) if bucket_cols is not None else list(order_cols)
     if list(order_cols)[: len(bucket_cols)] != bucket_cols:
         raise ValueError(
@@ -322,7 +319,7 @@ def distributed_ordinal(
         bucket = F.lit(0)
     tagged = df.withColumn("__bkt", bucket)
     w_local = Window.partitionBy("__bkt").orderBy(*cols)
-    if validate:
+    if validate_unique:
         # duplicate full keys are ADJACENT in the window's sort (and
         # always co-bucket, since the bucket id is a deterministic
         # function of a key prefix), so a lag() equality over the SAME
@@ -360,7 +357,7 @@ def distributed_ordinal(
         # column lineitem traversal. Per-row when() costs one branch
         # per row; the raise fires the moment any duplicate key's
         # ordinal is computed.
-        if not validate:
+        if not validate_unique:
             return ord_expr
         return F.when(
             F.col("__dup") == 1,
@@ -514,7 +511,6 @@ def zip_join_update(
     values_col: str,
     visible: Column | None = None,
     apply_when: Column | None = None,
-    page_scale: bool = False,
     validate_unique: bool = False,
     bucket_cols: Sequence[str] | None = None,
 ) -> DataFrame:
@@ -542,11 +538,7 @@ def zip_join_update(
     100 TB note: both ordinals default to :func:`distributed_ordinal`
     (range-partitioned local sorts + an n_parts-row broadcast offset
     table — no single-partition sort node anywhere on the data path);
-    the ordinal equi-join then shuffles normally. ``page_scale=True``
-    switches back to the global-window :func:`with_ordinal`, which
-    mirrors the reference's one-visible-page semantic (user.js:432-452)
-    and plans fewer stages on tiny inputs, but funnels the whole table
-    through one sort partition — never use it on an SF-scaling input.
+    the ordinal equi-join then shuffles normally.
 
     ``bucket_cols``: forwarded to :func:`distributed_ordinal` for the
     ROWS side (values side keys are caller-declared and usually cheap)
@@ -561,25 +553,17 @@ def zip_join_update(
     exactly where it is visible: at the values-exhaustion boundary,
     one tie sibling gets a new value and the other retains its old one
     (user.js:451's min-length truncation). ``validate_unique=True``
-    enforces this with one aggregate per side (distributed path only).
+    enforces this on both sides' ordinals (the ordinal window's lag
+    check; a duplicate key raises ``not unique`` at execution).
     """
     zip_ord = "__zip_ord"  # private: must not collide with caller columns
-    if page_scale:
-        # the global window has the identical tie under-specification
-        # as the distributed path (one partition's stable sort order
-        # just hides it) — share the same fail-loud guard (ADVICE r5
-        # #1: before round 6 this path silently ignored the flag)
-        def ordinal(d, oc, c, bc=None):
-            v = validate_unique or os.environ.get("SPARK_GRAFT_VALIDATE_ORDINAL") == "1"
-            return with_ordinal(d, oc, c, validate_unique=v)
-    else:
-        def ordinal(d, oc, c, bc=None):
-            return distributed_ordinal(
-                d, oc, c, validate_unique=validate_unique, bucket_cols=bc
-            )
     vis = None if visible is None else F.coalesce(visible, F.lit(False))
-    rows = ordinal(
-        df if vis is None else df.filter(vis), order_cols, zip_ord, bucket_cols
+    rows = distributed_ordinal(
+        df if vis is None else df.filter(vis),
+        order_cols,
+        zip_ord,
+        validate_unique=validate_unique,
+        bucket_cols=bucket_cols,
     )
     vals_src = values.select(
         *values_order_cols, F.col(values_col).alias("__new_value")
@@ -610,7 +594,9 @@ def zip_join_update(
             vals_src, values_order_cols, zip_ord, validate_unique=validate_unique
         )
     else:
-        vals = ordinal(vals_src, values_order_cols, zip_ord)
+        vals = distributed_ordinal(
+            vals_src, values_order_cols, zip_ord, validate_unique=validate_unique
+        )
     vals = vals.select(zip_ord, "__new_value")
     new_val = F.coalesce(F.col("__new_value").cast(df.schema[column].dataType), F.col(column))
     if apply_when is not None:
@@ -1011,8 +997,7 @@ def _q_r09_zip_join_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Core r09 — since round 4 this certifies the SCALE-SAFE form:
     zip_join_update defaults to distributed_ordinal on both sides, so
     the driver's CORRECTNESS row covers the plan with no
-    single-partition sort (the page-scale global-window variant is the
-    ext-tier ``r09_zip_join_page``, same oracle). Since round 5 the
+    single-partition sort. Since round 5 the
     ordinal key carries full-row tiebreakers (R09_ORDER_COLS) and
     ``validate_unique=True`` so a non-unique key fails loudly instead
     of silently permuting ties; since round 6 the ordinal buckets on
@@ -1057,33 +1042,6 @@ def _q_r09_zip_join_hashkey(spark: SparkSession, sf_dir: str) -> DataFrame:
         visible=F.col("l_linestatus") == "O",
         validate_unique=True,
         bucket_cols=R09_BUCKET_COLS,
-    )
-    return updated.select("l_orderkey", "l_linenumber", "l_returnflag")
-
-
-def _q_r09_zip_join_page(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """r09's page-scale parity form (``page_scale=True``): global-window
-    ordinals, mirroring the reference's one-visible-page loop
-    (user.js:432-452). Bit-identical to the core r09 (same oracle) —
-    kept ext-tier so both physical ordinal strategies stay under
-    oracle coverage after round 4 swapped the core onto
-    distributed_ordinal. Same full-row tiebreaker key as the core
-    (R09_ORDER_COLS) — the global window has the identical tie
-    under-specification, it just hid it behind one partition's stable
-    sort order. validate_unique=True here too: since round 6 the
-    page-scale path shares the uniqueness guard (ADVICE r5 #1)."""
-    li = load_table(spark, sf_dir, "lineitem")
-    part = load_table(spark, sf_dir, "part")
-    updated = zip_join_update(
-        li,
-        R09_ORDER_COLS,
-        "l_returnflag",
-        part,
-        ["p_partkey"],
-        "p_name",
-        visible=F.col("l_linestatus") == "O",
-        page_scale=True,
-        validate_unique=True,
     )
     return updated.select("l_orderkey", "l_linenumber", "l_returnflag")
 
@@ -1179,7 +1137,6 @@ QUERIES = {
     "r10_limit": _q_r10_limit,
     "r16_outcome_classify": _q_r16_outcome_classify,
     "r08_multiline_parse": _q_r08_multiline_parse,
-    "r09_zip_join_page": _q_r09_zip_join_page,
     "r01_scan_ordinal": _q_r01_scan_ordinal,
     "r03_projection": _q_r03_projection,
     "r05_readonly_any": _q_r05_readonly_any,
@@ -1310,11 +1267,6 @@ ORACLES = {
         FROM lineitem GROUP BY l_returnflag
     """,
 }
-
-# identical output contract to r09 — only the physical ordinal
-# strategy differs (r09 = distributed_ordinal since round 4; this entry
-# keeps the page-scale global-window form oracle-checked)
-ORACLES["r09_zip_join_page"] = ORACLES["r09_zip_join_update"]
 
 # the md5 tiebreaker in the ORDER BY is generated from the SAME
 # R09_ROW_COLS tuple as the Spark column (shared fragment pair in

@@ -241,44 +241,6 @@ def _q_s_r22_pymanifest_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.table(name)
 
 
-def _q_s_r22_spool_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """R22 on the manifest protocol with a 100% JVM DATA PLANE
-    (VERDICT r15 #3 — the measured answer to the Python DataSource's
-    ~×2 Arrow-over-Python row path): the same staged corpus, manifest,
-    counts shape, and oracle as `s_r22_manifest_counts`, but rows flow
-    through the built-in vectorized parquet file source over a spool
-    directory; the manifest cursor only hard-links newly listed files
-    into the spool (O(new) metadata, zero rows through Python), and
-    cleanSource=delete keeps the spool listing O(unprocessed). The
-    pump is driven one file per step to force genuine micro-batches
-    through the notification protocol."""
-    from odoo_batch_processing_spark.sources.manifest import manifest_file_stream
-
-    stream, pump = manifest_file_stream(
-        spark,
-        _stage_r22_manifest(spark, sf_dir),
-        _scratch_dir("r22-spool"),
-        max_files_per_trigger=1,
-    )
-    name = _mem_name("s_r22sp")
-    q = (
-        stream.groupBy("event_type")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", _scratch_dir("r22-spool-ckpt"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()  # the pre-pumped first file
-        while pump.pump(1):  # one notification per step → one trigger each
-            q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name)
-
-
 def _q_s_x7_stream_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X7 streaming: watermarked hourly windows (complete mode so every
     window emits and the batch oracle matches; the append-mode
@@ -1372,10 +1334,6 @@ QUERIES = {
         # the measured timings land in LAST_RATE_RECEIPT / RATE_RECEIPT.json
         "s_rate_throughput": _q_s_rate_throughput,
         "s_r22_change_counts": _q_s_r22_change_counts,
-        # the spool twin: manifest protocol, JVM data plane; measured
-        # against the other R22 forms by tools/scale_batches.py's
-        # three-way dataplane ladder
-        "s_r22_spool_counts": _q_s_r22_spool_counts,
         # the PyDS-manifest form (Arrow-over-Python row path) that the
         # JVM spool data plane replaced under s_r22_manifest_counts
         "s_r22_pymanifest_counts": _q_s_r22_pymanifest_counts,
@@ -1552,7 +1510,6 @@ from odoo_batch_processing_spark.operators import similarity as _sim  # noqa: E4
 ORACLES["s_x4_stream_index_probe"] = _sim.ORACLES["x4_ivf_indexed_multiprobe"]
 
 # every R22 form (directory listing, manifest over the JVM spool,
-# spool, PyDS manifest) must reproduce the full events counts
+# PyDS manifest) must reproduce the full events counts
 ORACLES["s_r22_manifest_counts"] = ORACLES["s_r22_change_counts"]
-ORACLES["s_r22_spool_counts"] = ORACLES["s_r22_change_counts"]
 ORACLES["s_r22_pymanifest_counts"] = ORACLES["s_r22_change_counts"]

@@ -380,31 +380,29 @@ def test_validate_unique_accepts_null_keys(spark):
         ).collect()
 
 
-def test_page_scale_zip_join_shares_uniqueness_guard(spark):
-    """ADVICE r5 #1: page_scale=True must not silently bypass
-    validate_unique — both ordinal strategies share the fail-loud
-    guard, so a duplicate key raises on the page path exactly as it
-    does on the distributed path."""
+def test_zip_join_values_side_shares_uniqueness_guard(spark):
+    """ADVICE r5 #1: every ordinal strategy shares the fail-loud guard.
+    A small values relation takes the global-window :func:`with_ordinal`
+    on the default path, so a duplicate VALUES key must raise there
+    exactly as a duplicate row key does on the distributed path."""
     import pandas as pd
     import pytest as _pytest
 
     from odoo_batch_processing_spark.operators.bulk_update import zip_join_update
 
     rows = spark.createDataFrame(
-        pd.DataFrame({"k": [1, 1, 2], "v": ["a", "b", "c"]})
+        pd.DataFrame({"k": [1, 2, 3], "v": ["a", "b", "c"]})
     )
-    vals = spark.createDataFrame(pd.DataFrame({"i": [1, 2], "nv": ["X", "Y"]}))
+    dup_vals = spark.createDataFrame(
+        pd.DataFrame({"i": [1, 1], "nv": ["X", "Y"]})
+    )
     with _pytest.raises(Exception, match="not unique"):
         zip_join_update(
-            rows, ["k"], "v", vals, ["i"], "nv",
-            page_scale=True, validate_unique=True,
+            rows, ["k"], "v", dup_vals, ["i"], "nv", validate_unique=True
         ).collect()
-    # unique key passes on the same path
-    ok = spark.createDataFrame(pd.DataFrame({"k": [1, 2, 3], "v": ["a", "b", "c"]}))
-    out = zip_join_update(
-        ok, ["k"], "v", vals, ["i"], "nv",
-        page_scale=True, validate_unique=True,
-    )
+    # unique keys pass on the same path
+    vals = spark.createDataFrame(pd.DataFrame({"i": [1, 2], "nv": ["X", "Y"]}))
+    out = zip_join_update(rows, ["k"], "v", vals, ["i"], "nv", validate_unique=True)
     assert sorted((r["k"], r["v"]) for r in out.collect()) == [
         (1, "X"), (2, "Y"), (3, "c")
     ]

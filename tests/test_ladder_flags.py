@@ -55,26 +55,29 @@ def test_healthy_families_stay_unflagged():
     """No false positives on the worst recorded non-hazard rows: the
     committed artifacts (incl. mm_neardup's output-bound growth and
     the falling x6 family where a flat stage must not flag) pass both
-    rules clean — with the same output-rows exemption the generating
-    tools apply (r18: the round's optimizations lowered every OTHER
-    doclen stage's top-rung ratio, so the unchanged, pair-emitting
-    mm_neardup crossed the leave-one-out median with no code change;
-    its rows grow ×29 for ×1.6 sec, exactly the output-bound case)."""
-    for fname in ("SCALE_DIM.json", "SCALE_DOCLEN.json", "SCALE_JSONSIZE.json"):
-        with open(os.path.join(REPO, fname)) as fh:
+    rules clean — with output rows passed only for the stages each
+    axis declares output-bound, as the ladder runner does (r18: the
+    round's optimizations lowered every OTHER doclen stage's top-rung
+    ratio, so the unchanged, pair-emitting mm_neardup crossed the
+    leave-one-out median with no code change; its rows grow ×29 for
+    ×1.6 sec, exactly the output-bound case)."""
+    from tools import scale_dim, scale_doclen, scale_jsonsize
+
+    for spec in (scale_dim.SPEC, scale_doclen.SPEC, scale_jsonsize.SPEC):
+        with open(os.path.join(REPO, spec.artifact)) as fh:
             art = json.load(fh)
         stage_secs = {
             name: [r["stages"][name]["sec"] for r in art["results"]]
             for name in art["results"][0]["stages"]
         }
         stage_rows = {
-            name: [r["stages"][name].get("rows", 0) for r in art["results"]]
-            for name in art["results"][0]["stages"]
+            name: [r["stages"][name]["rows"] for r in art["results"]]
+            for name in spec.output_bound
         }
         flagged, div = flagged_stages(
             stage_secs, art["flag_ratio"], stage_rows=stage_rows
         )
-        assert flagged == [], (fname, flagged, div)
+        assert flagged == [], (spec.artifact, flagged, div)
 
 
 def test_output_bound_exemption_requires_rows_to_outgrow_time():

@@ -1,5 +1,7 @@
-"""Shared flagging rules for the axis scale ladders (scale_dim,
-scale_doclen, scale_jsonsize).
+"""Shared flagging rules for the axis scale ladders. The one caller is
+tools/ladder.py's ``summarize``, which applies them to the flagged axes
+(scale_dim, scale_doclen, scale_jsonsize; scale_smoke records no
+flags).
 
 Two rules, applied together (VERDICT r8 item 3):
 
@@ -98,11 +100,16 @@ def flagged_stages(
     under factor 2.0" (module docstring); the r18 optimizations
     lowered every OTHER stage's top-rung ratio, dropped the
     leave-one-out median, and the unchanged mm_neardup crossed the
-    relative line with no code change to it at all. When callers pass
-    per-stage output rows, a divergent rung is exempt iff
+    relative line with no code change to it at all. A divergent rung
+    of a stage present in ``stage_rows`` is exempt iff
     ``rows_i/rows_0 >= sec_i/sec_0`` (rows_0 > 0 required; the
     ABSOLUTE rule is untouched — a family-wide blowup still flags).
-    The exemption is recorded in the divergence map
+    The waiver is only as narrow as the stages it is given: a stage
+    whose pair count blows up would waive its own time blow-up, so
+    tools/ladder.py passes rows ONLY for the stages an axis declares
+    output-bound (``AxisSpec.output_bound``: doclen's mm_neardup; none
+    on dim and jsonsize) — any other stage's rows growth waives
+    nothing. The exemption is recorded in the divergence map
     (``output_bound_exempt_rungs``) so the receipt shows what was
     waived and why, rather than silently passing."""
     div = family_divergence(stage_secs, floor_sec=floor_sec)

@@ -34,7 +34,6 @@ import json
 import os
 import subprocess
 import sys
-import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
@@ -66,10 +65,10 @@ MIN_PASSING = 2
 
 
 def _child(cpus: int, docs: int, tokens: int) -> None:
-    from bench import drain
     from odoo_batch_processing_spark.registry import all_queries
-    from odoo_batch_processing_spark.session import get_spark, release_materialized
+    from odoo_batch_processing_spark.session import get_spark
     from odoo_batch_processing_spark.sources.sinks import scratch_dir
+    from tools.ladder import timed_drain
     from tools.scale_doclen import build_corpus
 
     spark = get_spark("scale-cores", cpus=cpus, shuffle_partitions=cpus)
@@ -85,17 +84,8 @@ def _child(cpus: int, docs: int, tokens: int) -> None:
     queries = all_queries(extended=True)
     out: dict[str, float] = {}
     for name in QUERIES:
-        drain(queries[name](spark, corpus))  # warm (JVM, footers, codegen)
-        release_materialized()
-        spark.catalog.clearCache()
-        runs = []
-        for _ in range(REPS):
-            release_materialized()
-            spark.catalog.clearCache()
-            t0 = time.perf_counter()
-            drain(queries[name](spark, corpus))
-            runs.append(time.perf_counter() - t0)
-        out[name] = round(min(runs), 3)
+        timed_drain(spark, queries[name], corpus)  # warm (JVM, footers, codegen)
+        out[name] = round(timed_drain(spark, queries[name], corpus, REPS)["sec"], 3)
     print(json.dumps({"cpus": cpus, "sec": out}))
 
 

@@ -31,13 +31,12 @@ Writes SCALE_DIM.json; exit 1 if any stage is flagged.
 
 from __future__ import annotations
 
-import argparse
-import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from tools.ladder import AxisSpec, main  # noqa: E402
 
 #: dimensions-per-vector multipliers; vectors scale 1/M so volume is
 #: constant. The ladder runs a rung deeper than the doc-length ladder
@@ -82,96 +81,25 @@ def build_corpus(spark, out: str, n_vecs: int, dim: int) -> None:
     )
 
 
-def main() -> int:
-    parser = argparse.ArgumentParser()
-    parser.add_argument("--base-vecs", type=int, default=40000)
-    parser.add_argument("--base-dim", type=int, default=32)
-    parser.add_argument(
-        "--cpus", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    )
-    args = parser.parse_args()
+def _rung(spark, args, mult: int, corpus: str) -> dict:
+    n_vecs, dim = args.base_vecs // mult, args.base_dim * mult
+    build_corpus(spark, corpus, n_vecs, dim)
+    return {"n_vecs": n_vecs, "dim": dim}
 
-    from bench import drain
-    from odoo_batch_processing_spark.registry import all_queries
-    from odoo_batch_processing_spark.session import get_spark, release_materialized
-    from odoo_batch_processing_spark.sources.sinks import scratch_dir
 
-    spark = get_spark("scale-dim", cpus=args.cpus, shuffle_partitions=args.cpus)
-    spark.sparkContext.setLogLevel("ERROR")
-    queries = all_queries(extended=True)
-
-    results = []
-    for mult in MULTS:
-        n_vecs = args.base_vecs // mult
-        dim = args.base_dim * mult
-        corpus = scratch_dir(f"dim-{mult}x")
-        build_corpus(spark, corpus, n_vecs, dim)
-        # warm pass per rung (codegen + scan cache), then the timed pass
-        for name in STAGES:
-            drain(queries[name](spark, corpus))
-        row = {"mult": mult, "n_vecs": n_vecs, "dim": dim, "stages": {}}
-        for name in STAGES:
-            release_materialized()
-            spark.catalog.clearCache()
-            t0 = time.perf_counter()
-            out_rows = drain(queries[name](spark, corpus))
-            row["stages"][name] = {
-                "sec": round(time.perf_counter() - t0, 2),
-                "rows": out_rows,
-            }
-        results.append(row)
-        print(
-            f"[d={dim:4d} x {n_vecs:6d} vecs] "
-            + "  ".join(f"{s}={v['sec']:.1f}s" for s, v in row["stages"].items()),
-            file=sys.stderr,
-        )
-
-    from tools.ladder_flags import flagged_stages
-
-    # a sub-10ms rung 0 would make the ratio meaningless (and the
-    # old `else 0.0` guard silently UN-flaggable) — fail loud on
-    # the floor instead of green-lighting an unmeasurable stage
-    stage_secs = {
-        name: [r["stages"][name]["sec"] for r in results] for name in STAGES
-    }
-    # both rules: absolute top-rung > FLAG_RATIO, plus per-rung family
-    # divergence (>2× family-median ratio — the rule that would have
-    # caught the pre-fix int8 Θ(d²) at d×16, where it measured ×2.4:
-    # real, but under the absolute line; see tools/ladder_flags.py)
-    flagged, divergence = flagged_stages(stage_secs, FLAG_RATIO)
-    print(f"{'stage':24s} " + "  ".join(f"d*{m:<4d}" for m in MULTS), file=sys.stderr)
-    for name in STAGES:
-        secs = stage_secs[name]
-        ratio = secs[-1] / max(secs[0], 0.01)
-        dr = divergence[name]["divergent_rungs"]
-        print(
-            f"{name:24s} " + "  ".join(f"{s:6.2f}" for s in secs)
-            + f"  (x{ratio:.1f}{'  DIVERGENT@' + str(dr) if dr else ''})",
-            file=sys.stderr,
-        )
-
-    payload = {
-        "metric": "scale_dim",
-        "base_vecs": args.base_vecs,
-        "base_dim": args.base_dim,
-        "mults": list(MULTS),
-        "flag_ratio": FLAG_RATIO,
-        "flagged_dim_superlinear": flagged,
-        "divergence": divergence,
-        "results": results,
-    }
-    line = json.dumps(payload, separators=(",", ":"))
-    with open(
-        os.path.join(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-            "SCALE_DIM.json",
-        ),
-        "w",
-    ) as fh:
-        fh.write(line + "\n")
-    print(line)
-    return 1 if flagged else 0
+SPEC = AxisSpec(
+    metric="scale_dim",
+    artifact="SCALE_DIM.json",
+    stages=STAGES,
+    options=(("--base-vecs", 40000), ("--base-dim", 32)),
+    rung=_rung,
+    scratch="dim",
+    mults=MULTS,
+    warm_every_rung=True,
+    flag_key="flagged_dim_superlinear",
+    flag_ratio=FLAG_RATIO,
+)
 
 
 if __name__ == "__main__":
-    raise SystemExit(main())
+    raise SystemExit(main(SPEC))

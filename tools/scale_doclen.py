@@ -26,13 +26,12 @@ Writes SCALE_DOCLEN.json; exit 1 if any stage is flagged.
 
 from __future__ import annotations
 
-import argparse
-import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from tools.ladder import AxisSpec, main  # noqa: E402
 
 #: tokens-per-doc multipliers; docs scale 1/M so volume is constant
 MULTS = (1, 4, 16)
@@ -105,105 +104,28 @@ def build_corpus(
     )
 
 
-def main() -> int:
-    parser = argparse.ArgumentParser()
-    parser.add_argument("--base-docs", type=int, default=4000)
-    parser.add_argument("--base-tokens", type=int, default=64)
-    parser.add_argument(
-        "--cpus", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    )
-    args = parser.parse_args()
+def _rung(spark, args, mult: int, corpus: str) -> dict:
+    n_docs, n_tokens = args.base_docs // mult, args.base_tokens * mult
+    build_corpus(spark, corpus, n_docs, n_tokens)
+    return {"n_docs": n_docs, "tokens_per_doc": n_tokens}
 
-    from bench import drain
-    from odoo_batch_processing_spark.registry import all_queries
-    from odoo_batch_processing_spark.session import get_spark, release_materialized
-    from odoo_batch_processing_spark.sources.sinks import scratch_dir
 
-    spark = get_spark("scale-doclen", cpus=args.cpus, shuffle_partitions=args.cpus)
-    spark.sparkContext.setLogLevel("ERROR")
-    queries = all_queries(extended=True)
-
-    results = []
-    warmed = False
-    for mult in MULTS:
-        n_docs = args.base_docs // mult
-        n_tokens = args.base_tokens * mult
-        corpus = scratch_dir(f"doclen-{mult}x")
-        build_corpus(spark, corpus, n_docs, n_tokens)
-        if not warmed:
-            for name in STAGES:
-                drain(queries[name](spark, corpus))
-            warmed = True
-        row = {"mult": mult, "n_docs": n_docs, "tokens_per_doc": n_tokens, "stages": {}}
-        for name in STAGES:
-            release_materialized()
-            spark.catalog.clearCache()
-            t0 = time.perf_counter()
-            out_rows = drain(queries[name](spark, corpus))
-            row["stages"][name] = {
-                "sec": round(time.perf_counter() - t0, 2),
-                "rows": out_rows,
-            }
-        results.append(row)
-        print(
-            f"[T={n_tokens:5d} x {n_docs:5d} docs] "
-            + "  ".join(f"{s}={v['sec']:.1f}s" for s, v in row["stages"].items()),
-            file=sys.stderr,
-        )
-
-    from tools.ladder_flags import flagged_stages
-
-    # a sub-10ms rung 0 would make the ratio meaningless (and the
-    # old `else 0.0` guard silently UN-flaggable) — fail loud on
-    # the floor instead of green-lighting an unmeasurable stage.
-    # Both rules apply: absolute top-rung > FLAG_RATIO plus per-rung
-    # family divergence (tools/ladder_flags.py — the int8 lesson).
-    stage_secs = {
-        name: [r["stages"][name]["sec"] for r in results] for name in STAGES
-    }
-    # output rows per rung feed the output-bound exemption: a stage
-    # emitting an output relation that grows as fast as its seconds
-    # (mm_neardup's pairs, ×29 rows for ×1.6 sec at T×16) is linear in
-    # its output, not per-doc superlinear — see ladder_flags docstring
-    stage_rows = {
-        name: [r["stages"][name]["rows"] for r in results] for name in STAGES
-    }
-    flagged, divergence = flagged_stages(
-        stage_secs, FLAG_RATIO, stage_rows=stage_rows
-    )
-    print(f"{'stage':26s} " + "  ".join(f"T*{m:<4d}" for m in MULTS), file=sys.stderr)
-    for name in STAGES:
-        secs = stage_secs[name]
-        ratio = secs[-1] / max(secs[0], 0.01)
-        dr = divergence[name]["divergent_rungs"]
-        print(
-            f"{name:26s} " + "  ".join(f"{s:6.2f}" for s in secs)
-            + f"  (x{ratio:.1f}{'  DIVERGENT@' + str(dr) if dr else ''})",
-            file=sys.stderr,
-        )
-
-    payload = {
-        "metric": "scale_doclen",
-        "base_docs": args.base_docs,
-        "base_tokens": args.base_tokens,
-        "mults": list(MULTS),
-        "flag_ratio": FLAG_RATIO,
-        "flagged_length_superlinear": flagged,
-        "divergence": divergence,
-        "results": results,
-    }
-    line = json.dumps(payload, separators=(",", ":"))
-    with open(
-        os.path.join(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-            "SCALE_DOCLEN.json",
-        ),
-        "w",
-    ) as fh:
-        fh.write(line + "\n")
-    print(line)
-    return 1 if flagged else 0
+SPEC = AxisSpec(
+    metric="scale_doclen",
+    artifact="SCALE_DOCLEN.json",
+    stages=STAGES,
+    options=(("--base-docs", 4000), ("--base-tokens", 64)),
+    rung=_rung,
+    scratch="doclen",
+    mults=MULTS,
+    flag_key="flagged_length_superlinear",
+    flag_ratio=FLAG_RATIO,
+    # the one pair-emitting stage: at fixed token volume longer docs
+    # legitimately yield far more near-dup pairs (x29 rows for x1.6
+    # sec at T x16), so its rows may outgrow its seconds
+    output_bound=("mm_neardup",),
+)
 
 
 if __name__ == "__main__":
-    raise SystemExit(main())
+    raise SystemExit(main(SPEC))

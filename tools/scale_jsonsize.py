@@ -25,13 +25,12 @@ absolute top-rung rule (> FLAG_RATIO) or by family divergence
 
 from __future__ import annotations
 
-import argparse
-import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from tools.ladder import AxisSpec, main  # noqa: E402
 
 MULTS = (1, 4, 16)
 FLAG_RATIO = 4.0
@@ -76,92 +75,25 @@ def build_corpus(spark, out: str, n_events: int, props_bytes: int) -> None:
     )
 
 
-def main() -> int:
-    parser = argparse.ArgumentParser()
-    parser.add_argument("--base-events", type=int, default=200_000)
-    parser.add_argument("--base-bytes", type=int, default=64)
-    parser.add_argument(
-        "--cpus", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    )
-    args = parser.parse_args()
+def _rung(spark, args, mult: int, corpus: str) -> dict:
+    n_events, nbytes = args.base_events // mult, args.base_bytes * mult
+    build_corpus(spark, corpus, n_events, nbytes)
+    return {"n_events": n_events, "props_bytes": nbytes}
 
-    from bench import drain
-    from odoo_batch_processing_spark.registry import all_queries
-    from odoo_batch_processing_spark.session import get_spark, release_materialized
-    from odoo_batch_processing_spark.sources.sinks import scratch_dir
 
-    spark = get_spark("scale-jsonsize", cpus=args.cpus, shuffle_partitions=args.cpus)
-    spark.sparkContext.setLogLevel("ERROR")
-    queries = all_queries(extended=True)
-
-    results = []
-    for mult in MULTS:
-        n_events = args.base_events // mult
-        nbytes = args.base_bytes * mult
-        corpus = scratch_dir(f"jsonsize-{mult}x")
-        build_corpus(spark, corpus, n_events, nbytes)
-        for name in STAGES:  # warm pass per rung
-            drain(queries[name](spark, corpus))
-        row = {"mult": mult, "n_events": n_events, "props_bytes": nbytes, "stages": {}}
-        for name in STAGES:
-            release_materialized()
-            spark.catalog.clearCache()
-            t0 = time.perf_counter()
-            out_rows = drain(queries[name](spark, corpus))
-            row["stages"][name] = {
-                "sec": round(time.perf_counter() - t0, 2),
-                "rows": out_rows,
-            }
-        results.append(row)
-        print(
-            f"[{nbytes:5d}B x {n_events:6d} events] "
-            + "  ".join(f"{s}={v['sec']:.1f}s" for s, v in row["stages"].items()),
-            file=sys.stderr,
-        )
-
-    from tools.ladder_flags import flagged_stages
-
-    # both rules: absolute top-rung > FLAG_RATIO plus per-rung family
-    # divergence (tools/ladder_flags.py — the int8 lesson); the
-    # min_ratio guard matters most HERE, where the healthy family
-    # falls to ×0.2 and a merely-flat stage must not flag
-    stage_secs = {
-        name: [r["stages"][name]["sec"] for r in results] for name in STAGES
-    }
-    flagged, divergence = flagged_stages(stage_secs, FLAG_RATIO)
-    print(f"{'stage':20s} " + "  ".join(f"B*{m:<4d}" for m in MULTS), file=sys.stderr)
-    for name in STAGES:
-        secs = stage_secs[name]
-        ratio = secs[-1] / max(secs[0], 0.01)
-        dr = divergence[name]["divergent_rungs"]
-        print(
-            f"{name:20s} " + "  ".join(f"{s:6.2f}" for s in secs)
-            + f"  (x{ratio:.1f}{'  DIVERGENT@' + str(dr) if dr else ''})",
-            file=sys.stderr,
-        )
-
-    payload = {
-        "metric": "scale_jsonsize",
-        "base_events": args.base_events,
-        "base_bytes": args.base_bytes,
-        "mults": list(MULTS),
-        "flag_ratio": FLAG_RATIO,
-        "flagged_size_superlinear": flagged,
-        "divergence": divergence,
-        "results": results,
-    }
-    line = json.dumps(payload, separators=(",", ":"))
-    with open(
-        os.path.join(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-            "SCALE_JSONSIZE.json",
-        ),
-        "w",
-    ) as fh:
-        fh.write(line + "\n")
-    print(line)
-    return 1 if flagged else 0
+SPEC = AxisSpec(
+    metric="scale_jsonsize",
+    artifact="SCALE_JSONSIZE.json",
+    stages=STAGES,
+    options=(("--base-events", 200_000), ("--base-bytes", 64)),
+    rung=_rung,
+    scratch="jsonsize",
+    mults=MULTS,
+    warm_every_rung=True,
+    flag_key="flagged_size_superlinear",
+    flag_ratio=FLAG_RATIO,
+)
 
 
 if __name__ == "__main__":
-    raise SystemExit(main())
+    raise SystemExit(main(SPEC))

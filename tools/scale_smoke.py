@@ -23,13 +23,12 @@ Prints one table + one JSON line (also written to SCALE_SMOKE.json).
 
 from __future__ import annotations
 
-import argparse
-import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from tools.ladder import AxisSpec, main  # noqa: E402
 
 
 def build_corpus(spark, sf_dir: str, mult: int, out: str) -> int:
@@ -113,66 +112,20 @@ STAGES = (
 )
 
 
-def main() -> int:
-    parser = argparse.ArgumentParser()
-    parser.add_argument("--sf-dir", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
-    parser.add_argument("--mults", default="1,2,4,8")
-    parser.add_argument("--cpus", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
-    args = parser.parse_args()
-    mults = [int(m) for m in args.mults.split(",")]
-
-    from bench import drain
-    from odoo_batch_processing_spark.registry import all_queries
-    from odoo_batch_processing_spark.session import get_spark, release_materialized
-    from odoo_batch_processing_spark.sources.sinks import scratch_dir
-
-    spark = get_spark("scale-smoke", cpus=args.cpus, shuffle_partitions=args.cpus)
-    spark.sparkContext.setLogLevel("ERROR")
-    queries = all_queries(extended=True)
-
-    results = []
-    warmed = False
-    for mult in mults:
-        corpus = scratch_dir(f"scale-smoke-{mult}x")
-        n_docs = build_corpus(spark, args.sf_dir, mult, corpus)
-        if not warmed:  # JVM/codegen warmup outside the timed stages
-            for name in STAGES:
-                drain(queries[name](spark, corpus))
-            warmed = True
-        row = {"mult": mult, "n_docs": n_docs, "stages": {}}
-        for name in STAGES:
-            # honest timing: without this, a timed stage re-reads the
-            # persisted intermediates its own warmup (or a prior stage)
-            # cached, measuring a cache read instead of the pipeline
-            release_materialized()
-            spark.catalog.clearCache()
-            t0 = time.perf_counter()
-            out_rows = drain(queries[name](spark, corpus))
-            secs = round(time.perf_counter() - t0, 2)
-            row["stages"][name] = {"sec": secs, "rows": out_rows}
-        results.append(row)
-        print(
-            f"[{mult:2d}x] {n_docs:7d} docs  "
-            + "  ".join(f"{s}={v['sec']:.1f}s/{v['rows']}r" for s, v in row["stages"].items()),
-            file=sys.stderr,
-        )
-
-    # linearity read-out: seconds per 1k docs at each scale — flat-ish
-    # numbers mean the plan has no quadratic term
-    for name in STAGES:
-        per_k = [r["stages"][name]["sec"] / (r["n_docs"] / 1000) for r in results]
-        print(
-            f"{name:24s} sec/1k-docs: " + "  ".join(f"{x:6.3f}" for x in per_k),
-            file=sys.stderr,
-        )
-
-    payload = {"metric": "scale_smoke", "sf_dir": args.sf_dir, "results": results}
-    line = json.dumps(payload, separators=(",", ":"))
-    with open(os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "SCALE_SMOKE.json"), "w") as fh:
-        fh.write(line + "\n")
-    print(line)
-    return 0
+SPEC = AxisSpec(
+    metric="scale_smoke",
+    artifact="SCALE_SMOKE.json",
+    stages=STAGES,
+    options=(
+        ("--sf-dir", os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")),
+        ("--mults", "1,2,4,8"),
+    ),
+    rung=lambda spark, args, mult, corpus: {
+        "n_docs": build_corpus(spark, args.sf_dir, mult, corpus)
+    },
+    scratch="scale-smoke",
+)
 
 
 if __name__ == "__main__":
-    raise SystemExit(main())
+    raise SystemExit(main(SPEC))

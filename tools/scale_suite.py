@@ -117,26 +117,17 @@ def build_star(spark, sf_dir: str, mult: int, out: str) -> dict[str, int]:
 
 
 def time_suite(spark, queries, sf_dir: str, reps: int) -> dict[str, dict]:
-    from bench import drain
-    from odoo_batch_processing_spark.session import release_materialized
+    from tools.ladder import timed_drain
 
     out: dict[str, dict] = {}
     for name, fn in sorted(queries.items()):
-        runs: list[float] = []
-        rows = -1
-        for _ in range(reps):
-            release_materialized()
-            spark.catalog.clearCache()
-            t0 = time.perf_counter()
-            try:
-                rows = drain(fn(spark, sf_dir))
-            except Exception as exc:
-                print(f"scale_suite: {name} failed at {sf_dir}: {exc!r}", file=sys.stderr)
-                runs = [-1.0]
-                break
-            runs.append(time.perf_counter() - t0)
-        out[name] = {"sec": round(min(runs), 4), "rows": rows}
-        print(f"  {name:28s} {out[name]['sec']:8.2f}s  {rows}r", file=sys.stderr)
+        try:
+            t = timed_drain(spark, fn, sf_dir, reps)
+            out[name] = {"sec": round(t["sec"], 4), "rows": t["rows"]}
+        except Exception as exc:
+            print(f"scale_suite: {name} failed at {sf_dir}: {exc!r}", file=sys.stderr)
+            out[name] = {"sec": -1.0, "rows": -1}
+        print(f"  {name:28s} {out[name]['sec']:8.2f}s  {out[name]['rows']}r", file=sys.stderr)
         # same hygiene as bench.py: drop Python-side DataFrame refs
         # promptly so the ContextCleaner releases localCheckpoint RDD
         # blocks between queries — the suite executes ~100 queries in
